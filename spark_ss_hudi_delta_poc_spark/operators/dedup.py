@@ -116,16 +116,14 @@ def shingle_table(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     )
 
 
-def _shingle_pair_overlaps(
-    docs: DataFrame,
-    n: int,
-    max_shingle_df: int | None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def _shingle_pair_overlaps(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
     """(doc_id_a, doc_id_b, inter, na, nb) for every doc pair sharing at
-    least one (df-capped) shingle — the inverted-index join every exact
-    set-similarity measure starts from.
+    least one (df-capped) shingle of the (doc_id, shingle) table ``sh`` —
+    the inverted-index join every exact set-similarity measure starts
+    from.  The lazy interior plan of :func:`ngram_jaccard_pairs` and
+    :func:`ngram_containment_pairs`, kept separate so tests/test_plans.py
+    can pin its shape (the public functions return a materialized
+    checkpoint whose explain shows only a scan).
 
     ``max_shingle_df`` drops shingles appearing in more than N docs
     before the self-join — at 100 TB this is mandatory: one stop-shingle
@@ -145,7 +143,6 @@ def _shingle_pair_overlaps(
     same groupBy that counts the intersection — the winnow_overlap_pairs
     shape, zero joins after the pair aggregate.
     """
-    sh = shingle_table(docs, text_col=text_col, id_col=id_col, n=n)
     if max_shingle_df is not None:
         frequent = (
             sh.groupBy("shingle")
@@ -168,6 +165,38 @@ def _shingle_pair_overlaps(
     )
 
 
+def _materialized_overlap_pairs(
+    docs: DataFrame,
+    n: int,
+    max_shingle_df: int | None,
+    measure,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """``measure`` applied to the shingle overlaps of ``docs``, returned
+    as an eagerly materialized checkpoint.
+
+    The shingle table feeds four consumers (the df-cap aggregate, the
+    anti-join, the sizes aggregate, the sizes join) and the self-join
+    copies each, so a lazy table re-runs the Python shingle UDF for
+    several of them.  It is persisted for the length of the call and
+    forced by one count BEFORE the pair plan runs, so every document
+    passes through the UDF once: a lazy persist alone is not enough,
+    because concurrent AQE query stages each recompute the input before
+    the cache is filled.  The result is checkpointed while the cache is
+    hot and the cache released in a ``finally`` — the minhash_lsh_pairs
+    shape, so no CacheManager entry outlives the call (round-4 leak).
+    """
+    from pyspark import StorageLevel
+
+    sh = shingle_table(docs, text_col=text_col, id_col=id_col, n=n).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        sh.count()
+        return measure(_shingle_pair_overlaps(sh, max_shingle_df)).localCheckpoint(eager=True)
+    finally:
+        sh.unpersist()
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -178,21 +207,20 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via shingle self-join (see
     :func:`_shingle_pair_overlaps` for the df-cap scale argument).
-    Pass ``max_shingle_df=None`` for exact textbook Jaccard."""
-    out = (
-        _shingle_pair_overlaps(docs, n, max_shingle_df, text_col=text_col, id_col=id_col)
-        .select(
+    Pass ``max_shingle_df=None`` for exact textbook Jaccard.  The pairs
+    come back materialized (:func:`_materialized_overlap_pairs`)."""
+
+    def jaccard(ov: DataFrame) -> DataFrame:
+        uni = F.col("na") + F.col("nb") - F.col("inter")
+        return ov.select(
             "doc_id_a",
             "doc_id_b",
             "inter",
-            (F.col("na") + F.col("nb") - F.col("inter")).alias("uni"),
-            (F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")).alias(
-                "jaccard"
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out
+            uni.alias("uni"),
+            (F.col("inter").cast("double") / uni.cast("double")).alias("jaccard"),
+        ).where(F.col("jaccard") >= threshold)
+
+    return _materialized_overlap_pairs(docs, n, max_shingle_df, jaccard, text_col=text_col, id_col=id_col)
 
 
 def ngram_containment_pairs(
@@ -209,20 +237,21 @@ def ngram_containment_pairs(
     Jaccard misses doc-inside-doc duplication (a page quoted whole
     inside a 10× longer page has J ≈ 0.1 but C = 1.0) — the dominant
     boilerplate/quotation pattern in crawled corpora.  Same single
-    inverted-index join as Jaccard; only the final measure differs.
+    inverted-index join as Jaccard, materialized the same way; only the
+    final measure differs.
     """
-    return (
-        _shingle_pair_overlaps(docs, n, max_shingle_df, text_col=text_col, id_col=id_col)
-        .select(
+
+    def containment(ov: DataFrame) -> DataFrame:
+        return ov.select(
             "doc_id_a",
             "doc_id_b",
             "inter",
             "na",
             "nb",
             (F.col("inter").cast("double") / F.least("na", "nb").cast("double")).alias("containment"),
-        )
-        .where(F.col("containment") >= threshold)
-    )
+        ).where(F.col("containment") >= threshold)
+
+    return _materialized_overlap_pairs(docs, n, max_shingle_df, containment, text_col=text_col, id_col=id_col)
 
 
 def minhash_signatures(docs: DataFrame, k: int = MINHASH_K, n: int = 3) -> DataFrame:
@@ -440,6 +469,19 @@ def simhash_neardup_pairs(
     )
 
 
+def release_checkpoints(df: DataFrame) -> None:
+    """Drop the blocks of every eager ``localCheckpoint`` that ``df``
+    reads.  A local checkpoint is a persisted RDD outside the
+    CacheManager, so ``unpersist`` cannot reach it, and in practice it
+    outlives its DataFrame for the rest of the session.  Call this only
+    once nothing will read ``df`` again: its rows are gone afterwards."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()  # noqa: SLF001
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
+
+
 def dedup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id)
     where cluster_id = min doc_id in the component.  This is the step that
@@ -451,45 +493,58 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     O(graph diameter) rounds; near-dup graphs are almost all tiny stars,
     so 2-3 rounds in practice).  Each round: label'(v) = min(label(v),
     min over neighbors u of label(u)).  Driver loop exits on fixpoint.
+
+    What is materialized, and when it is released:
+
+    - ``edges`` (both orientations of every pair, built in ONE pass over
+      ``pairs``) is persisted and forced before the loop, so a lazy pair
+      plan runs exactly once; the entry is released in a ``finally``.
+    - each round's labels are computed once, by an eager
+      ``localCheckpoint`` (which also truncates the lineage — without it
+      each round's plan nests the previous one and deep components make
+      analysis itself the bottleneck).  Convergence is tested on that
+      checkpoint through its ``moved`` flag, so a round runs its label
+      join once.  A round's checkpoint is released as soon as the next
+      one is materialized; the returned frame owns the last round's
+      (release it with :func:`release_checkpoints` when done).
     """
+    from pyspark import StorageLevel
+
     edges = (
-        pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
-        .unionByName(pairs.select(F.col("doc_id_b").alias("src"), F.col("doc_id_a").alias("dst")))
-        .distinct()
-        .persist()
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")),
+                    F.struct(F.col("doc_id_b").alias("src"), F.col("doc_id_a").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
+        edges.count()
         labels = edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
+        prev = None  # the previous round's checkpoint, released once superseded
         for _ in range(max_iterations):
-            labels = labels.persist()
-            try:
-                neighbor_min = (
-                    edges.join(labels, edges.dst == labels.node)
-                    .groupBy("src")
-                    .agg(F.min("label").alias("nbr_label"))
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.node)
+                .groupBy("src")
+                .agg(F.min("label").alias("nbr_label"))
+            )
+            labels = (
+                labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
+                .select(
+                    "node",
+                    F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias("label"),
+                    F.coalesce(F.col("nbr_label") < F.col("label"), F.lit(False)).alias("moved"),
                 )
-                new_labels = (
-                    labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-                    .select(
-                        "node",
-                        F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias("label"),
-                    )
-                )
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-                    .where(F.col("n.label") != F.col("o.label"))
-                    .limit(1)
-                    .count()
-                )
-                # truncate lineage: without this each round's plan nests the
-                # previous one, and deep components make analysis itself the
-                # bottleneck (production CC checkpoints the same way)
-                new_labels = new_labels.localCheckpoint(eager=True)
-            finally:
-                labels.unpersist()
-            labels = new_labels
-            if changed == 0:
+                .localCheckpoint(eager=True)
+            )
+            if prev is not None:
+                release_checkpoints(prev)
+            prev = labels
+            if labels.where(F.col("moved")).limit(1).count() == 0:
                 break
         return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
     finally:
@@ -698,16 +753,13 @@ def minhash_recall_report(
 
     Returns a single row (matched, total, recall).
     """
-    # materialize the ground truth ONCE via an eager localCheckpoint
-    # (round-15 optimization, guide §1.2 — the fuzzy_recall_report
-    # precedent): `total` and the broadcast semi-join are separate
-    # actions, so without it the full shingle-Jaccard pipeline ran
-    # TWICE.  The checkpointed rows are the bounded true near-dup pair
-    # set, never the corpus.
-    exact = (
-        ngram_jaccard_pairs(docs, threshold=threshold, n=n, max_shingle_df=max_shingle_df)
-        .select("doc_id_a", "doc_id_b")
-        .localCheckpoint(eager=True)
+    # ngram_jaccard_pairs returns its pairs materialized, so `total` and
+    # the broadcast semi-join below are two cheap reads of one
+    # checkpoint, never two runs of the shingle-Jaccard pipeline.  The
+    # checkpointed rows are the bounded true near-dup pair set, never the
+    # corpus.
+    exact = ngram_jaccard_pairs(docs, threshold=threshold, n=n, max_shingle_df=max_shingle_df).select(
+        "doc_id_a", "doc_id_b"
     )
     total = exact.count()  # bounded: the true near-dup pair set
     # re-state the bound ON the checkpointed plan: a checkpoint scan

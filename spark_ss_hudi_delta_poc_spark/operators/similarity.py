@@ -1301,8 +1301,13 @@ def ann_recall_report(
     # (round-15 optimization, guide §1.2 — the fuzzy_recall_report /
     # dsir_rank_keep precedent): `total` and the broadcast semi-join are
     # separate actions, so without it the brute-force corpus pass ran
-    # TWICE.  The checkpointed rows are the bounded |queries|·k top-k
-    # set, never the corpus.
+    # TWICE.  These checkpointed rows are the bounded |queries|·k top-k
+    # set — but the narrow (id, vec) corpus above is checkpointed too,
+    # so the report holds a corpus-sized copy.  Local checkpoints live in
+    # unreplicated executor storage: on a cluster, losing an executor
+    # loses its blocks and the report fails instead of recomputing them.
+    # That is the price of one corpus scan per report; where it is too
+    # high, a reliable checkpoint or a written table is the choice.
     exact = (
         brute_force_topk(corpus, qset, k, id_col, vec_col)
         .select("query_id", "neighbor_id")

@@ -74,6 +74,7 @@ def job_notification_ingest(spark, cfg) -> None:
         sink_path=cfg["sink"],
         checkpoint=cfg["checkpoint"],
         file_format=cfg["source_format"],
+        schema=RETAIL_SCHEMA,
         max_files_per_trigger=cfg["max_files_per_trigger"],
     )
     q.awaitTermination()
@@ -106,7 +107,13 @@ def job_corpus_build(spark, cfg) -> dict:
     chunks, written partitioned by language, with a stats JSON line.
 
     The full LLM-data pipeline as one job — every stage is the
-    oracle-checked operator, composed."""
+    oracle-checked operator, composed.  The exact-dedup survivors feed
+    the near-dup pair join, the output write and the stage counts, so
+    they are persisted once (forced by their own count).  The near-dup
+    pairs and clusters come back from their operators as materialized
+    checkpoints.  All three are released before the job returns, so no
+    cache entry or persisted RDD outlives it."""
+    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from .operators import dedup, text_analysis
@@ -120,28 +127,36 @@ def job_corpus_build(spark, cfg) -> dict:
     docs_q = docs.join(keep_quality, "doc_id", "left_semi")
 
     reps = dedup.exact_dedup(docs_q).select(F.col("keep_doc_id").alias("doc_id"))
-    docs_e = docs_q.join(reps, "doc_id", "left_semi")
+    docs_e = docs_q.join(reps, "doc_id", "left_semi").persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = clusters = None
+    try:
+        n_exact = docs_e.count()
 
-    pairs = dedup.ngram_jaccard_pairs(docs_e, threshold=0.5)
-    clusters = dedup.dedup_clusters(pairs)
-    drop_near = clusters.where(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
-    docs_n = docs_e.join(drop_near, "doc_id", "left_anti")
+        pairs = dedup.ngram_jaccard_pairs(docs_e, threshold=0.5)
+        clusters = dedup.dedup_clusters(pairs)
+        drop_near = clusters.where(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
+        docs_n = docs_e.join(drop_near, "doc_id", "left_anti")
 
-    scrubbed = docs_n.join(text_analysis.scrub_pii(docs_n), "doc_id").select(
-        "doc_id", F.col("clean_text").alias("text"), "lang", "source"
-    )
-    chunks = text_analysis.chunk_documents(scrubbed).join(
-        scrubbed.select("doc_id", "lang"), "doc_id"
-    )
-    chunks.write.mode("overwrite").partitionBy("lang").parquet(cfg["sink"])
+        scrubbed = docs_n.join(text_analysis.scrub_pii(docs_n), "doc_id").select(
+            "doc_id", F.col("clean_text").alias("text"), "lang", "source"
+        )
+        chunks = text_analysis.chunk_documents(scrubbed).join(
+            scrubbed.select("doc_id", "lang"), "doc_id"
+        )
+        chunks.write.mode("overwrite").partitionBy("lang").parquet(cfg["sink"])
 
-    out = {
-        "input_docs": n_input,
-        "after_quality": docs_q.count(),
-        "after_exact_dedup": docs_e.count(),
-        "after_near_dedup": docs_n.count(),
-        "chunks": spark.read.parquet(cfg["sink"]).count(),
-    }
+        out = {
+            "input_docs": n_input,
+            "after_quality": docs_q.count(),
+            "after_exact_dedup": n_exact,
+            "after_near_dedup": docs_n.count(),
+            "chunks": spark.read.parquet(cfg["sink"]).count(),
+        }
+    finally:
+        for done in (pairs, clusters):
+            if done is not None:
+                dedup.release_checkpoints(done)
+        docs_e.unpersist()
     print(json.dumps(out))
     return out
 

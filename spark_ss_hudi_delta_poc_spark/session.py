@@ -48,6 +48,31 @@ _COMMON_CONF: dict[str, str] = {
 }
 
 
+def _env_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` as a positive int; unset, the CPUs this
+    process may run on (its affinity mask, not the machine's count)."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
+    try:
+        cores = int(raw)
+    except ValueError:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}") from None
+    if cores <= 0:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cores
+
+
+def _env_parallelism_first() -> str:
+    """``SPARK_GRAFT_AQE_PARALLELISM_FIRST`` (``true``/``false`` only);
+    unset, the scale-adaptive default of ``_COMMON_CONF``."""
+    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    raw = os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", _COMMON_CONF[key])
+    if raw not in ("true", "false"):
+        raise ValueError(f"SPARK_GRAFT_AQE_PARALLELISM_FIRST must be 'true' or 'false', got {raw!r}")
+    return raw
+
+
 def get_spark(
     app_name: str = "spark-ss-hudi-delta-poc-spark",
     profile: str = "local",
@@ -59,9 +84,12 @@ def get_spark(
 
     ``cores`` / ``shuffle_partitions`` default from env vars the driver
     uses (SPARK_GRAFT_CPUS) so bench and tests share one code path.
+    Both environment knobs are checked before any session is touched: a
+    malformed value raises ``ValueError`` instead of being passed on.
     """
+    parallelism_first = _env_parallelism_first()
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = _env_cores()
     if shuffle_partitions is None:
         # Local rule of thumb: shuffle partitions ~= cores.  On a cluster
         # AQE coalesces from a deliberately high initial number instead.
@@ -76,10 +104,7 @@ def get_spark(
     # from the environment so the coalescing policy can be measured in
     # isolation (tools/bench_ab-style replay with ONLY this changed).
     # The default stays the scale-adaptive "false" documented above.
-    conf["spark.sql.adaptive.coalescePartitions.parallelismFirst"] = os.environ.get(
-        "SPARK_GRAFT_AQE_PARALLELISM_FIRST",
-        conf["spark.sql.adaptive.coalescePartitions.parallelismFirst"],
-    )
+    conf["spark.sql.adaptive.coalescePartitions.parallelismFirst"] = parallelism_first
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if profile != "local":
         # Spill-aware sizing for the 100 TB case: 256 MB input splits keep

@@ -307,7 +307,8 @@ class NotificationStreamReader(SimpleDataSourceStreamReader):
         # WAL'd the end offset — re-emit it verbatim (idempotent restart)
         for m in self._manifests():
             if m["start"] == emitted:
-                return iter(tuple(r) for r in m["rows"]), {"emitted": m["end"]}
+                # a list iterator, not a generator: Spark pickles it
+                return iter([tuple(r) for r in m["rows"]]), {"emitted": m["end"]}
         batch: list[tuple[str, int]] = []
         row_msgs: list[tuple[str, str]] = []  # (token, key)
         dead_tokens: list[str] = []
@@ -408,7 +409,9 @@ def notification_ingest(
 
     ``queue_dir=None`` with ``queueUrl=...``/``stateDir=...`` in
     ``source_options`` runs against a real SQS queue instead of the
-    local directory stand-in."""
+    local directory stand-in.  CSV files are read with their header
+    line (the reference's retail files carry one); pass ``schema`` for
+    typed columns."""
     spark.dataSource.register(NotificationFileSource)
     reader = spark.readStream.format("notification_files").option(
         "maxFilesPerTrigger", str(max_files_per_trigger)
@@ -424,6 +427,8 @@ def notification_ingest(
         if not paths:
             return
         reader = batch_df.sparkSession.read.format(file_format)
+        if file_format == "csv":
+            reader = reader.option("header", "true")
         if schema is not None:
             reader = reader.schema(schema)
         reader.load(paths).write.mode("append").format("parquet").save(sink_path)

@@ -328,3 +328,35 @@ def test_notification_ingest_end_to_end(spark, tmp_path):
     # round 2's batch construction committed round 1's batch → round 1's
     # message was deleted; round 2's own message is still in-flight
     assert len([f for f in os.listdir(queue) if f.endswith(".json")]) == 1
+
+
+def test_orphan_manifest_replay_runs_under_spark(spark, tmp_path):
+    """The orphan-manifest replay path must hand Spark something it can
+    pickle.  Drain a 4-file queue at cap 4 with two starts: the last
+    batch's manifest stays journaled (its commit never comes).  A start
+    on the same queue dir with a fresh checkpoint begins at offset 0,
+    finds that manifest and re-emits it verbatim."""
+    data_dir = os.path.join(tmp_path, "data")
+    queue = os.path.join(tmp_path, "q")
+    os.makedirs(queue)
+    spark.range(100).selectExpr("id", "id * 2 AS v").repartition(4).write.parquet(data_dir)
+    parts = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
+    assert len(parts) == 4
+    for i, p in enumerate(parts):
+        with open(os.path.join(queue, f"m{i}.json"), "w") as f:
+            f.write(_msg(os.path.join(data_dir, p), 1000 + i))
+    first = os.path.join(tmp_path, "sink1")
+    for _ in range(2):
+        notification_ingest(
+            spark, queue, first, checkpoint=os.path.join(tmp_path, "ckpt1"), max_files_per_trigger=4
+        ).awaitTermination()
+    assert spark.read.parquet(first).count() == 100
+    assert any(f.startswith("range-") for f in os.listdir(os.path.join(queue, ".state")))
+
+    replay = os.path.join(tmp_path, "sink2")
+    notification_ingest(
+        spark, queue, replay, checkpoint=os.path.join(tmp_path, "ckpt2"), max_files_per_trigger=4
+    ).awaitTermination()
+    back = spark.read.parquet(replay)
+    assert back.count() == 100
+    assert back.agg({"v": "sum"}).collect()[0][0] == sum(2 * i for i in range(100))

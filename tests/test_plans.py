@@ -477,6 +477,31 @@ def test_minhash_interior_is_bucket_equijoin(spark):
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
 
 
+def test_shingle_overlap_interior_is_certified(spark):
+    """dedup_ngram_jaccard / dedup_ngram_containment materialize eagerly
+    (their public explain shows only the checkpoint scan), so pin the
+    INTERIOR plan via _shingle_pair_overlaps with size-based broadcasts
+    off: the hinted broadcast is the df-cap's heavy-hitter set and
+    carries its certificate, the per-doc sizes are never broadcast, and
+    no pair stage is a cross product."""
+    from spark_ss_hudi_delta_poc_spark.operators.dedup import (
+        MAX_SHINGLE_DF,
+        _shingle_pair_overlaps,
+        shingle_table,
+    )
+    from spark_ss_hudi_delta_poc_spark.tables import load
+
+    docs = load(spark, SF, "documents")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        p = _formatted(_shingle_pair_overlaps(shingle_table(docs), MAX_SHINGLE_DF))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastExchange" in p and _uncertified_broadcasts(p) == []
+    assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
+
+
 def test_bm25_has_no_corpus_sized_join_side(spark):
     """bm25 must never materialize a corpus-sized join side: round 5
     broadcast a row-per-document doc_len table (driver OOM at 100 TB,

@@ -125,3 +125,61 @@ def test_corpus_build_job(spark, tmp_path, capsys):
     assert any(d.startswith("lang=") for d in _os.listdir(sink) if not d.startswith("_"))
     back = spark.read.parquet(sink)
     assert {"doc_id", "chunk_idx", "chunk_text", "n_tokens", "lang"} <= set(back.columns)
+
+
+def test_notification_ingest_job_lands_typed_csv_rows(spark, tmp_path):
+    """A 2-file retail CSV queue: the content reader gets the header
+    option and the retail schema, so every data line lands as one typed
+    row and no header line lands at all."""
+    from spark_ss_hudi_delta_poc_spark.runner import job_notification_ingest
+    from spark_ss_hudi_delta_poc_spark.schemas import RETAIL_SCHEMA
+
+    data, queue, sink = (os.path.join(tmp_path, d) for d in ("data", "queue", "sink"))
+    os.makedirs(data)
+    os.makedirs(queue)
+    for i, rows in enumerate((RETAIL_ROWS[:2], RETAIL_ROWS[2:])):
+        path = os.path.join(data, f"day{i}.csv")
+        with open(path, "w") as f:
+            f.write(RETAIL_HEADER + "\n" + "\n".join(rows) + "\n")
+        with open(os.path.join(queue, f"m{i}.json"), "w") as f:
+            json.dump({"path": path, "eventTime": 1000 + i}, f)
+    cfg = resolve(
+        "local",
+        source=queue,
+        sink=sink,
+        checkpoint=os.path.join(tmp_path, "ckpt"),
+        max_files_per_trigger=2,
+    )
+    job_notification_ingest(spark, cfg)
+    back = spark.read.parquet(sink)
+    assert back.schema == RETAIL_SCHEMA
+    got = {r.srno: r for r in back.collect()}
+    assert sorted(got) == [1, 2, 3]  # no header row (its srno would be NULL)
+    assert got[1].StockCode == "85123A" and got[1].UnitPrice == 2.55
+    assert got[3].Country == "France" and got[3].CustomerID is None
+
+
+def test_session_env_fails_loudly(monkeypatch):
+    """A malformed SPARK_GRAFT_AQE_PARALLELISM_FIRST or SPARK_GRAFT_CPUS
+    raises before get_spark touches any session; unset, the core count
+    is the process's CPU affinity."""
+    import pytest
+
+    from spark_ss_hudi_delta_poc_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session._env_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session._env_cores() == 3
+    for bad in ("0", "-2", "four", "2.5", ""):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            session.get_spark()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    for ok in ("true", "false"):
+        monkeypatch.setenv("SPARK_GRAFT_AQE_PARALLELISM_FIRST", ok)
+        assert session._env_parallelism_first() == ok
+    for bad in ("TRUE", "1", "yes", ""):
+        monkeypatch.setenv("SPARK_GRAFT_AQE_PARALLELISM_FIRST", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_AQE_PARALLELISM_FIRST"):
+            session.get_spark()

@@ -63,30 +63,35 @@ def node_classes(plan_text: str) -> set[str]:
     return {name for name, pat in _NODE_CLASSES if re.search(pat, plan_text)}
 
 
-def _executions(spark) -> dict[int, str]:
-    """executionId -> physicalPlanDescription from the live UI status
-    store — the one place where BOTH streaming micro-batch plans and
-    foreachBatch interior batch actions are recorded as executed."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    lst = store.executionsList()
-    out = {}
-    for i in range(lst.size()):
-        e = lst.apply(i)
-        out[e.executionId()] = e.physicalPlanDescription()
-    return out
+def _store(spark):
+    """The live UI status store — the one place where BOTH streaming
+    micro-batch plans and foreachBatch interior batch actions are
+    recorded as executed."""
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def _execution_ids(spark) -> set[int]:
+    lst = _store(spark).executionsList()
+    return {lst.apply(i).executionId() for i in range(lst.size())}
 
 
 def live_execution_classes(spark, run) -> list[tuple[int, set[str]]]:
     """Run ``run()`` and return (executionId, class set) for every SQL
-    execution it produced, empty-class executions dropped."""
-    before = set(_executions(spark))
+    execution it produced, empty-class executions dropped.
+
+    Only the new executions' plan descriptions are fetched: the store
+    keeps up to ``spark.sql.ui.retainedExecutions`` (1000) of them, and
+    copying every description into Python before and after each run
+    cost ~3 s per copy once a session had run a few hundred queries."""
+    before = _execution_ids(spark)
     run()
-    after = _executions(spark)
-    return [
-        (eid, cls)
-        for eid, text in sorted(after.items())
-        if eid not in before and (cls := node_classes(text))
-    ]
+    store = _store(spark)
+    out = []
+    for eid in sorted(_execution_ids(spark) - before):
+        data = store.execution(eid)
+        if data.isDefined() and (cls := node_classes(data.get().physicalPlanDescription())):
+            out.append((eid, cls))
+    return out
 
 
 def shadow_classes(spark, name: str) -> set[str]:
